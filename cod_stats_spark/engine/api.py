@@ -30,7 +30,7 @@ from cod_stats_spark.engine import (
     teams,
     timeseries as tsm,
 )
-from cod_stats_spark.engine.dims import game_modes_df, seasons_df
+from cod_stats_spark.engine.dims import SEASONS, game_modes_df, local_df, seasons_df
 from cod_stats_spark.engine import reports as rep
 
 
@@ -53,6 +53,7 @@ class Engine:
         self._matches_path = matches_path
         self._silver: DataFrame | None = None
         self._stats: DataFrame | None = None
+        self._player_ids: tuple[list[str], list[str]] | None = None
 
     @classmethod
     def from_paths(cls, spark: SparkSession, matches_path: str, players_json: str) -> "Engine":
@@ -75,8 +76,27 @@ class Engine:
             self._stats = st.stats_wz(self.valid_games(), self.players).persist()
         return self._stats
 
+    def player_ids(self) -> tuple[list[str], list[str]]:
+        """(every display player, the core players), sorted — the players
+        config collected ONCE per Engine, on first use. Boards filter on
+        the core list as a literal; the per-player documents fan out
+        over the full list."""
+        if self._player_ids is None:
+            # one row per account: a handful, deduplicated here rather
+            # than by a distinct's extra shuffle job
+            rows = self.players.select("player_id", "is_core").collect()
+            self._player_ids = (
+                sorted({r["player_id"] for r in rows}),
+                sorted({r["player_id"] for r in rows if r["is_core"]}),
+            )
+        return self._player_ids
+
+    def core_ids(self) -> list[str]:
+        return self.player_ids()[1]
+
     def core(self) -> DataFrame:
-        return st.core_players(self.players)
+        """Distinct core display players (reference vw_core_players)."""
+        return local_df(self.spark, [(p,) for p in self.core_ids()], "player_id string")
 
     def modes(self) -> DataFrame:
         return game_modes_df(self.spark)
@@ -119,22 +139,22 @@ class Engine:
         return rollups.placement_by_category(self.stats_wz(), self.modes())
 
     def leaderboards(self, k: int = lb.LEADERBOARD_K) -> dict[str, DataFrame]:
-        return lb.all_by_game_boards(self.stats_wz(), self.core(), k)
+        return lb.all_by_game_boards(self.stats_wz(), self.core_ids(), k)
 
     def gulag_streaks(self, wins: bool = True) -> DataFrame:
-        return lb.gulag_streaks(self.stats_wz(), self.core(), wins)
+        return lb.gulag_streaks(self.stats_wz(), self.core_ids(), wins)
 
     def most_wins(self) -> DataFrame:
-        return lb.most_wins(self.stats_wz(), self.core())
+        return lb.most_wins(self.stats_wz(), self.core_ids())
 
     def most_last_places(self) -> DataFrame:
-        return lb.most_last_places(self.stats_wz(), self.core())
+        return lb.most_last_places(self.stats_wz(), self.core_ids())
 
     def full_game_stats(self) -> DataFrame:
-        return teams.full_game_stats(self.stats_wz(), self.core())
+        return teams.full_game_stats(self.stats_wz(), self.core_ids())
 
     def team_breakdowns(self) -> DataFrame:
-        return teams.team_stat_breakdowns(self.stats_wz(), self.core())
+        return teams.team_stat_breakdowns(self.stats_wz(), self.core_ids())
 
     def recent_matches(self) -> DataFrame:
         return lb.recent_matches(self.full_game_stats())
@@ -206,31 +226,35 @@ class Engine:
         """
         from concurrent.futures import ThreadPoolExecutor
 
-        # Materialize the shared silver/stats persists ONCE, before
-        # the pool: the lazy builders are not thread-safe, and two
-        # concurrent first-actions would compute the same persisted
-        # partitions twice (the semantic_dedup argmin-race lesson).
-        # One count barrier here is one pass over a table ~20
-        # downstream collects then read from cache.
+        # Materialize the shared silver/stats persists and collect the
+        # players config ONCE, before the pool: the lazy builders are
+        # not thread-safe, and two concurrent first-actions would
+        # compute the same persisted partitions twice (the
+        # semantic_dedup argmin-race lesson).
         self.stats_wz().count()
+        self.player_ids()
 
         # Every document below reads the SAME materialized stats and
         # is independent of the others, so their Spark actions overlap
-        # from a small driver pool (guide §2.6 — actions are only
-        # sequential because driver code calls them sequentially).
-        # Serially this method paid ~20 back-to-back scheduler round
-        # trips of tiny top-k jobs. Results are byte-identical: each
-        # payload is built from its own deterministic collect, and the
-        # files are written in the same fixed order as before.
+        # in one flat driver pool (guide §2.6 — actions are only
+        # sequential because driver code calls them sequentially). At
+        # this scale a job is the unit of cost: each driver document is
+        # one collect (the 12 by-game boards one ranked pass; the 4
+        # lifetime boards two), each per-player fan-out one
+        # foreachPartition, 49 jobs in all on the benchmark's input —
+        # the per-document budget is in BENCH_NOTES.md. Results are
+        # byte-identical: each payload is built from its own
+        # deterministic collect, and the files are written in the same
+        # fixed order as before.
+        core = self.core_ids()
         docs: list[tuple[str, object]] = [
             ("leaderboard_bygame.json",
-             lambda: rep.leaderboard_bygame_doc(self.leaderboards())),
+             lambda: rep.leaderboard_bygame_doc(
+                 lb.ranked_by_game_boards(self.stats_wz(), core))),
             ("leaderboard_lifetime.json",
              lambda: rep.leaderboard_lifetime_doc(
-                 self.gulag_streaks(True),
-                 self.gulag_streaks(False),
-                 self.most_wins(),
-                 self.most_last_places(),
+                 lb.ranked_gulag_streaks(self.stats_wz(), core),
+                 lb.ranked_count_boards(self.stats_wz(), core),
              )),
             ("team_leaderboards.json",
              lambda: rep.team_leaderboards_doc(self.team_breakdowns())),
@@ -243,13 +267,17 @@ class Engine:
         ]
         written = []
         with ThreadPoolExecutor(max_workers=4) as pool:
-            player_docs = pool.submit(self._write_player_docs, out_dir)
+            # the fan-outs are the longest tasks: submitted first
+            fanouts = [(pool.submit(write), paths)
+                       for write, paths in self._player_doc_writers(out_dir)]
             futures = [(rel, pool.submit(fn)) for rel, fn in docs]
             for rel, fut in futures:
                 path = os.path.join(out_dir, rel)
                 rep.write_json(path, fut.result())
                 written.append(path)
-            written += player_docs.result()
+            for fut, paths in fanouts:
+                fut.result()
+                written += paths
         return written
 
     # per-player document fan-out ------------------------------------
@@ -270,13 +298,7 @@ class Engine:
         wasted aggregation pass per write_reports and skipped the
         empty-season docs the reference serves.
         """
-        from cod_stats_spark.engine.dims import SEASONS
-
-        players = sorted(
-            r["player_id"] for r in self.players.select("player_id").distinct().collect()
-        )
-        season_ids = sorted(s[0] for s in SEASONS)
-        return players, season_ids
+        return self.player_ids()[0], sorted(s[0] for s in SEASONS)
 
     @staticmethod
     def _grouped_rows(df: DataFrame, group_cols: list[str], sort_cols: list[str]) -> DataFrame:
@@ -313,19 +335,18 @@ class Engine:
 
         df.foreachPartition(write_part)
 
-    def _write_player_docs(self, out_dir: str) -> list[str]:
-        from pyspark.sql import functions as F
+    def _player_doc_writers(self, out_dir: str) -> list[tuple[object, list[str]]]:
+        """The 4 per-player fan-outs as (write thunk, paths it writes).
 
+        Each thunk builds its plan and runs its one foreachPartition
+        job, so write_reports can run them as peers of the driver
+        documents; the paths come from the driver-side player and
+        season lists, in the order the documents are keyed."""
         from cod_stats_spark.engine.timeseries import TS_METRICS
 
         players, season_ids = self._player_season_combos()
-        combos = self.spark.createDataFrame(
-            [(p, s) for p in players for s in season_ids],
-            "player_id string, season_id string",
-        )
-        players_df = self.spark.createDataFrame(
-            [(p,) for p in players], "player_id string"
-        )
+        per_season = [(p, s) for p in players for s in season_ids]
+        per_player = [(p,) for p in players]
         metrics = [tuple(m) for m in TS_METRICS]  # plain data → by-value pickle
 
         def ts_payload(frames):
@@ -349,50 +370,55 @@ class Engine:
 
         identity = lambda rows: rows  # noqa: E731
 
-        jobs = [
-            (
-                self.seasonal_daily_timeseries(),
+        def writer(build, group_cols, sort_cols, keys, template, payload_fn):
+            def write() -> None:
+                frame = local_df(
+                    self.spark, keys, ", ".join(f"{c} string" for c in group_cols)
+                )
+                grouped = self._grouped_rows(build(), group_cols, sort_cols)
+                full = frame.join(grouped, group_cols, "left")  # empty combos → []
+                self._foreach_write(full, out_dir, template, payload_fn)
+
+            paths = [
+                os.path.join(out_dir, template.format(**dict(zip(group_cols, key))))
+                for key in keys
+            ]
+            return write, paths
+
+        return [
+            writer(
+                self.seasonal_daily_timeseries,
                 ["player_id", "season_id"],
                 self.PLAYER_DOC_SORTS["time"],
-                combos,
+                per_season,
                 "players/{player_id}_{season_id}_time_wz.json",
                 ts_payload((3, 7)),
             ),
-            (
-                self.seasonal_by_game_timeseries(),
+            writer(
+                self.seasonal_by_game_timeseries,
                 ["player_id", "season_id"],
                 self.PLAYER_DOC_SORTS["game"],
-                combos,
+                per_season,
                 "players/{player_id}_{season_id}_game_wz.json",
                 ts_payload((10, 25)),
             ),
-            (
-                self.player_season_stats(),
+            writer(
+                self.player_season_stats,
                 ["player_id"],
                 ["sort_order"],
-                players_df,
+                per_player,
                 "players/{player_id}_player_stats.json",
                 identity,
             ),
-            (
-                self.session_stats(),
+            writer(
+                self.session_stats,
                 ["player_id"],
                 ["session_number"],
-                players_df,
+                per_player,
                 "players/sessions_{player_id}.json",
                 identity,
             ),
         ]
-        written = []
-        for df, group_cols, sort_cols, frame, template, payload_fn in jobs:
-            grouped = self._grouped_rows(df, group_cols, sort_cols)
-            full = frame.join(grouped, group_cols, "left")  # empty combos → []
-            self._foreach_write(full, out_dir, template, payload_fn)
-            written += [
-                os.path.join(out_dir, template.format(**{c: row[c] for c in group_cols}))
-                for row in frame.collect()
-            ]
-        return written
 
     def _write_player_docs_driver_side(self, out_dir: str) -> list[str]:
         """Legacy driver-side fan-out (collect everything, loop in

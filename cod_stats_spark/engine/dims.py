@@ -2,8 +2,8 @@
 
 Data values mirror the reference's dimension views (game modes:
 parser/parse_matches.sh:100-156; seasons: :158-184; settings:
-:186-198); the representation (python tuples → createDataFrame) and
-everything downstream is new.
+:186-198); the representation (python tuples → one inline VALUES
+table) and everything downstream is new.
 """
 
 from __future__ import annotations
@@ -94,9 +94,44 @@ SESSION_DELTA_SECONDS = 2 * 60 * 60  # 2h inactivity gap splits sessions
 SESSION_OPEN_END_EPOCH = 9_999_999_999
 
 
+def _sql_literal(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v)
+    # strings travel as UTF-8 hex and are cast back: no quoting or
+    # escaping rules to get wrong, whatever the parser settings
+    return f"X'{str(v).encode().hex()}'"
+
+
+def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small literal table as a ``LocalRelation`` (one inline VALUES
+    table), with the column names and types of the DDL ``schema``
+    ("name type, ..."; simple types only).
+
+    ``spark.createDataFrame(list)`` goes through ``parallelize`` to a
+    ``LogicalRDD``, so every scan of it schedules Python-worker tasks;
+    a local relation is folded by the optimizer and scanned from the
+    driver's memory (Spark SQL's LocalRelation).
+    """
+    cols = [c.strip().split(None, 1) for c in schema.split(",")]
+    values = [tuple(r) for r in rows] or [(None,) * len(cols)]
+    body = ", ".join(
+        "(" + ", ".join(_sql_literal(v) for v in r) + ")" for r in values
+    )
+    select = ", ".join(
+        f"CAST(c{i} AS {typ}) AS `{name}`" for i, (name, typ) in enumerate(cols)
+    )
+    aliases = ", ".join(f"c{i}" for i in range(len(cols)))
+    where = "" if rows else " WHERE FALSE"
+    return spark.sql(f"SELECT {select} FROM VALUES {body} AS t({aliases}){where}")
+
+
 def game_modes_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(GAME_MODES, GAME_MODES_SCHEMA)
+    return local_df(spark, GAME_MODES, GAME_MODES_SCHEMA)
 
 
 def seasons_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SEASONS, SEASONS_SCHEMA)
+    return local_df(spark, SEASONS, SEASONS_SCHEMA)

@@ -7,6 +7,14 @@ collected to the driver and written as single JSON files, mirroring
 the reference's static-file serving layer. At cluster scale the same
 DataFrames can instead be written with df.write.json per partition
 key; the shapes are identical.
+
+Job budget: each document is one collect of one plan (the lifetime
+document two: streaks and counts); under AQE a collect costs one job
+per shuffle stage plus one. A family of boards is one ranked frame
+(engine/leaderboards.py), collected once and split per board on the
+driver, so the 12 by-game boards cost 2 jobs, not 48. The whole write
+is 49 jobs on the benchmark's match_refresh input (122 before); the
+per-document table is in BENCH_NOTES.md.
 """
 
 from __future__ import annotations
@@ -17,6 +25,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 
+from cod_stats_spark.engine import leaderboards as lb
 from cod_stats_spark.engine.dims import SEASONS
 
 
@@ -30,22 +39,19 @@ def write_json(path: str, payload) -> None:
         json.dump(payload, f, separators=(",", ":"))
 
 
-def leaderboard_bygame_doc(boards: dict[str, DataFrame]) -> dict:
-    """{board_key: [ {date_key, game_mode_sub, game_id, player_id, value} ]}"""
-    return {name: _rows(df) for name, df in boards.items()}
+def leaderboard_bygame_doc(ranked: DataFrame) -> dict:
+    """{board_key: [ {date_key, game_mode_sub, game_id, player_id, value} ]}
+    from the ranked frame of :func:`leaderboards.ranked_by_game_boards`."""
+    return lb.collect_boards(ranked, lb.BY_GAME_METRICS, lb.BY_GAME_COLUMNS, value_per_board=True)
 
 
-def leaderboard_lifetime_doc(
-    gulag_win_streaks: DataFrame,
-    gulag_loss_streaks: DataFrame,
-    wins: DataFrame,
-    last_places: DataFrame,
-) -> dict:
+def leaderboard_lifetime_doc(streaks: DataFrame, counts: DataFrame) -> dict:
+    """Gulag win/loss streaks and most wins / last places, from the
+    ranked frames of :func:`leaderboards.ranked_gulag_streaks` and
+    :func:`leaderboards.ranked_count_boards`."""
     return {
-        "consecutive_gulag_kills": _rows(gulag_win_streaks),
-        "consecutive_gulag_deaths": _rows(gulag_loss_streaks),
-        "most_wins": _rows(wins),
-        "most_lastplaces": _rows(last_places),
+        **lb.collect_boards(streaks, lb.GULAG_STREAK_FLAGS, lb.STREAK_COLUMNS),
+        **lb.collect_boards(counts, lb.COUNT_PREDICATES, lb.COUNT_COLUMNS),
     }
 
 

@@ -7,6 +7,8 @@ Broadcast joins only — the fact side never shuffles here.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -59,9 +61,12 @@ def stats_wz(valid_games: DataFrame, players: DataFrame) -> DataFrame:
     )
 
 
-def core_players(players: DataFrame) -> DataFrame:
-    """Distinct core display players (reference vw_core_players)."""
-    return players.filter(F.col("is_core")).select("player_id").distinct()
+def core_only(stats: DataFrame, core_ids: Sequence[str]) -> DataFrame:
+    """Rows of core players (reference vw_core_players). Core membership
+    is a driver-side constant (the players config is collected once per
+    Engine): a literal IN filter folds into the plan, while a join
+    against the players dimension rescans and re-broadcasts it per plan."""
+    return stats.filter(F.col("player_id").isin(list(core_ids)))
 
 
 def stats_struct() -> F.Column:

@@ -9,30 +9,33 @@ vw_team_stat_breakdowns, parser/parse_matches.sh:379-469).
 - team_stat_breakdowns: per (category, roster) across full-team games:
   games/wins/last places/avg/max, HAVING numGames > 1.
 
-Spark shape: semi-join on core games → one groupBy(game_id) with
-collect_list(struct) → filter full teams → groupBy(category, roster).
-The reference's json_each re-explosion (J9) is unnecessary — sums are
-computed in the first aggregation.
+Spark shape: core-player filter → semi-join on core games → one
+groupBy(game_id) with collect_list(struct) → filter full teams →
+groupBy(category, roster). The reference's json_each re-explosion (J9)
+is unnecessary — sums are computed in the first aggregation.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cod_stats_spark.engine.dims import GAME_MODES
-from cod_stats_spark.engine.stats import stats_struct
+from cod_stats_spark.engine.stats import core_only, stats_struct
 
 FULL_TEAM_SIZES = {"wz_solo": 1, "wz_duos": 2, "wz_trios": 3, "wz_quads": 4}
 
 
-def full_game_stats(stats: DataFrame, core: DataFrame) -> DataFrame:
+def _core_games(stats: DataFrame, core_ids: Sequence[str]) -> DataFrame:
+    """Games with >=1 core player."""
+    return core_only(stats, core_ids).select("game_id").distinct()
+
+
+def full_game_stats(stats: DataFrame, core_ids: Sequence[str]) -> DataFrame:
     """Per-game roster + stats array over games with >=1 core player."""
-    core_games = (
-        stats.join(F.broadcast(core), "player_id", "left_semi")
-        .select("game_id")
-        .distinct()
-    )
+    core_games = _core_games(stats, core_ids)
     per_player = stats.join(core_games, "game_id", "left_semi").select(
         "date_key",
         "game_id",
@@ -50,7 +53,7 @@ def full_game_stats(stats: DataFrame, core: DataFrame) -> DataFrame:
     )
 
 
-def team_stat_breakdowns(stats: DataFrame, core: DataFrame) -> DataFrame:
+def team_stat_breakdowns(stats: DataFrame, core_ids: Sequence[str]) -> DataFrame:
     """Per (category, roster) rollup over FULL-team games, numGames > 1.
 
     Placement is per-team: every tracked member of a full team shares
@@ -63,11 +66,7 @@ def team_stat_breakdowns(stats: DataFrame, core: DataFrame) -> DataFrame:
         *[F.lit(x) for pair in modes for x in pair]
     )[F.col("game_mode_sub")]
 
-    core_games = (
-        stats.join(F.broadcast(core), "player_id", "left_semi")
-        .select("game_id")
-        .distinct()
-    )
+    core_games = _core_games(stats, core_ids)
     per_game = (
         stats.join(core_games, "game_id", "left_semi")
         .withColumn("category", cat)

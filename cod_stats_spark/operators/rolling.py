@@ -40,6 +40,18 @@ def _norm_metrics(metrics) -> list[tuple[str, str]]:
     return list(metrics)
 
 
+def _with_frames(df: DataFrame, w, metrics, sfx: str) -> DataFrame:
+    """One ``{metric}_{agg}_{sfx}`` column per metric over window ``w``,
+    added in ONE projection: a withColumn chain re-analyzes the whole
+    plan once per column, which dominated driver build time for the
+    36-column report series."""
+    cols: dict[str, Column] = {
+        f"{metric}_{agg}_{sfx}": _AGGS[agg](F.col(metric)).over(w)
+        for metric, agg in _norm_metrics(metrics)
+    }
+    return df.withColumns(cols)
+
+
 def rolling_frames(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -55,11 +67,7 @@ def rolling_frames(
     """
     sfx = suffix if suffix is not None else f"roll{preceding + 1}"
     w = _window(key_cols, order_cols).rowsBetween(-preceding, Window.currentRow)
-    out = df
-    for metric, agg in _norm_metrics(metrics):
-        col: Column = _AGGS[agg](F.col(metric)).over(w)
-        out = out.withColumn(f"{metric}_{agg}_{sfx}", col)
-    return out
+    return _with_frames(df, w, metrics, sfx)
 
 
 def rolling_time_frames(
@@ -94,10 +102,7 @@ def rolling_time_frames(
         .orderBy(F.col("_ts_ord").asc())
         .rangeBetween(-window_seconds * per_sec, Window.currentRow)
     )
-    for metric, agg in _norm_metrics(metrics):
-        col: Column = _AGGS[agg](F.col(metric)).over(w)
-        out = out.withColumn(f"{metric}_{agg}_{sfx}", col)
-    return out.drop("_ts_ord")
+    return _with_frames(out, w, metrics, sfx).drop("_ts_ord")
 
 
 def cumulative_frames(
@@ -109,8 +114,4 @@ def cumulative_frames(
 ) -> DataFrame:
     """Add running-total columns ``{metric}_{agg}_cume`` (unbounded preceding .. current)."""
     w = _window(key_cols, order_cols).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    out = df
-    for metric, agg in _norm_metrics(metrics):
-        col: Column = _AGGS[agg](F.col(metric)).over(w)
-        out = out.withColumn(f"{metric}_{agg}_{suffix}", col)
-    return out
+    return _with_frames(df, w, metrics, suffix)

@@ -15,6 +15,7 @@ The engine itself never assumes local mode.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -75,6 +76,10 @@ def get_spark(app_name: str = "cod_stats_spark", cpus: int | None = None) -> Spa
     return spark
 
 
+_SHIP_LOCK = threading.Lock()
+_SHIPPED_APPS: set[str] = set()
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make `cod_stats_spark` importable on every Python worker.
 
@@ -82,31 +87,39 @@ def ship_package(spark: SparkSession) -> None:
     stateful operators) are pickled BY REFERENCE — workers must import
     the module, and the driver's sys.path does not propagate to them.
     Shipping a zip via addPyFile fixes this regardless of the driver's
-    cwd/PYTHONPATH. Idempotent per session.
+    cwd/PYTHONPATH.
+
+    Ships once per SparkContext (keyed on its applicationId, so every
+    ``newSession()`` of one context shares it), under a lock: callers
+    on pool threads wait for the one archive instead of racing to add
+    a second. Each archive goes to its own ``mkdtemp`` directory — a
+    shared fixed path let one process overwrite a zip another had
+    already added, and executors then refused the changed file.
     """
-    marker = "spark.cod_stats_spark.pkg_shipped"
-    try:
-        if spark.conf.get(marker, "no") == "yes":
-            return
-    except Exception:
-        pass
+    import atexit
     import shutil
     import tempfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    try:
-        archive = shutil.make_archive(
-            os.path.join(tempfile.gettempdir(), "cod_stats_spark_pkg"),
-            "zip",
-            root_dir=root,
-            base_dir="cod_stats_spark",
-        )
-        spark.sparkContext.addPyFile(archive)
-        spark.conf.set(marker, "yes")
-    except Exception:
-        # non-fatal: driver-side-only plans still work
-        pass
+    sc = spark.sparkContext
+    with _SHIP_LOCK:
+        app = sc.applicationId
+        if app in _SHIPPED_APPS:
+            return
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        try:
+            tmp = tempfile.mkdtemp(prefix="cod_stats_spark_")
+            atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+            archive = shutil.make_archive(
+                os.path.join(tmp, "cod_stats_spark_pkg"),
+                "zip",
+                root_dir=os.path.dirname(pkg_dir),
+                base_dir="cod_stats_spark",
+            )
+            sc.addPyFile(archive)
+            _SHIPPED_APPS.add(app)
+        except Exception:
+            # non-fatal: driver-side-only plans still work
+            pass
 
 
 def prep_session(spark: SparkSession) -> SparkSession:

@@ -14,12 +14,43 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 T0 = 1_600_000_000  # 2020-09-13T12:26:40Z — inside season05
 
 
+def _root_cause(exc: BaseException) -> str:
+    """First line of each exception in a failed action's Java cause
+    chain, outermost first (the Python exception when there is none)."""
+    lines = []
+    j = getattr(exc, "java_exception", None)
+    while j is not None:
+        lines.append(j.toString())
+        j = j.getCause()
+    lines = lines or [f"{type(exc).__name__}: {exc}"]
+    return "\n  caused by: ".join(
+        (t.strip().splitlines() or [""])[0][:500] for t in lines
+    )
+
+
+def _check_session_health(spark) -> None:
+    """One trivial Python-worker action that imports the package on an
+    executor. A broken executor dependency (say, a shipped archive the
+    workers refuse) then stops the run here with its root cause,
+    instead of failing every later Spark test one by one."""
+    from cod_stats_spark.session import ship_package
+
+    ship_package(spark)
+    try:
+        spark.sparkContext.parallelize([0], 1).map(
+            lambda _: __import__("cod_stats_spark").__name__
+        ).collect()
+    except Exception as exc:  # noqa: BLE001 — any failure means unusable
+        pytest.exit(f"Spark session unhealthy: {_root_cause(exc)}", returncode=3)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from cod_stats_spark.session import get_spark
 
     s = get_spark("cod-stats-tests", cpus=4)
     s.conf.set("spark.sql.shuffle.partitions", "4")
+    _check_session_health(s)
     yield s
 
 

@@ -241,15 +241,22 @@ class TestReports:
         assert values == {"2 km"}
 
     def test_distributed_writer_matches_driver_side_bytes(self, engine, tmp_path):
-        """The executor-side per-player fan-out must emit byte-identical
-        files to the legacy collect-and-loop path it replaced."""
+        """The executor-side per-player fan-outs, run concurrently by
+        write_reports, must emit byte-identical files to the legacy
+        collect-and-loop path they replaced, and report exactly the
+        paths they wrote."""
+        import os
+
         dist = tmp_path / "dist"
         legacy = tmp_path / "legacy"
-        w_dist = engine._write_player_docs(str(dist))
+        w_dist = engine.write_reports(str(dist))
         w_leg = engine._write_player_docs_driver_side(str(legacy))
-        rel_dist = {p.split(str(dist) + "/")[1] for p in w_dist}
-        rel_leg = {p.split(str(legacy) + "/")[1] for p in w_leg}
-        assert rel_dist == rel_leg and len(rel_dist) > 10
+        rel_dist = {
+            os.path.relpath(p, dist) for p in w_dist if os.path.relpath(p, dist).startswith("players/")
+        }
+        rel_leg = {os.path.relpath(p, legacy) for p in w_leg}
+        on_disk = {f"players/{f}" for f in os.listdir(dist / "players")}
+        assert rel_dist == rel_leg == on_disk and len(rel_dist) > 10
         for rel in sorted(rel_leg):
             a = (dist / rel).read_bytes()
             b = (legacy / rel).read_bytes()
